@@ -15,6 +15,18 @@ At the 10^10-URL design point: 10 bits/key => ~12 GiB of bloom bits
 across >= 512 buckets of ~24 MiB — each bucket fits comfortably in an
 executor; buckets co-partition with the candidate side so the probe is
 a map-side operation after one hash-partition exchange.
+
+Where the bloom engages: only where the seen side is too big to
+broadcast.  While the seen hashes fit a broadcast, the exact anti-join
+is already a map-side ``BroadcastHashJoin`` with nothing left to
+bypass, and the bloom only adds a pandas cogroup probe and an
+OR-update per round (measured: plain anti-join 0.77 s vs the bloom
+split-union's 1.12 s).  Spark's own runtime bloom filter skips joins
+it can broadcast for the same reason.  The crawl engine
+(``plans/frontier.py``) therefore calls :func:`new_urls` with
+``blooms=None`` and a broadcast seen side until its tracked seen count
+passes ``broadcast_fetched_max``, and builds the bloom at the first
+commit past it.
 """
 
 from __future__ import annotations

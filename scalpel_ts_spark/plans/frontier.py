@@ -11,14 +11,18 @@ One crawl round is one Spark job pipeline over snapshot tables:
        │
     explode links ── canonicalize
        │
-    bloom prefilter + hash dedup (ONE bucket exchange) + exact
-    anti-join vs seen (operators.seen)
+    hash dedup + exact anti-join vs seen (operators.seen):
+      seen <= broadcast_fetched_max rows: dropDuplicates + ONE
+        broadcast anti-join (no bloom, no Python stage);
+      past it: bloom prefilter + hash dedup (ONE bucket exchange),
+        exact anti-join on the bloom suspects only
        │
     robots filter (runs on the small genuinely-new set: per-URL
     allow/deny commutes with dedup and set-difference)
        │
     write snapshots: docs+, fetch_log+, seen+, frontier', host_state',
-                     bloom', manifest (metrics + per-partition lineage)
+                     bloom' (once engaged), manifest (metrics +
+                     per-partition lineage)
 
 Storage goes through the :mod:`scalpel_ts_spark.plans.storage` seam:
 the sandbox uses ``ParquetSnapshotStorage`` (every table versioned by
@@ -73,7 +77,9 @@ TABLES = (
 )
 
 #: ~24 MB of longs — comfortably under Spark's driver/executor broadcast
-#: comfort zone; above this the anti-join falls back to a plain shuffle
+#: comfort zone; above this an anti-join falls back to a plain shuffle.
+#: Bounds both broadcast url_hash key sets: the per-round fetched set
+#: and the seen set (past it the seen dedup engages the bloom)
 DEFAULT_BROADCAST_FETCHED_MAX = 3_000_000
 
 #: per-host tables (one row per host) are collected and written driver-
@@ -120,6 +126,17 @@ def _obs_count(obs: Observation, key: str) -> int:
         return int(obs.get[key])
     except Exception:
         return 0
+
+
+def _join_all(futures) -> None:
+    """Wait for EVERY future, then raise the first failure with the
+    others attached as notes — a failed write must not leave its
+    siblings running unobserved, nor hide their errors."""
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(f"concurrent write also failed: {other!r}")
+        raise errors[0]
 
 
 def _coalesce_for_write(
@@ -227,9 +244,16 @@ class CrawlEngine:
         same bound caps consecutive ALL-error rounds before ``run``
         stops: transient total outages retry, genuine dead-ends halt.
 
-        ``broadcast_fetched_max``: the fetched-set anti-join broadcasts
-        only while the round budget (cap x n_hosts) is under this row
-        count; see :func:`frontier_anti_join`.
+        ``broadcast_fetched_max``: the row bound on every broadcast
+        ``url_hash`` key set.  The fetched-set anti-join broadcasts
+        only while the round budget (cap x n_hosts) is under it (see
+        :func:`frontier_anti_join`), and the seen dedup broadcasts the
+        seen set while the tracked seen count is at or under it.  Past
+        it the bloom engages: the first commit whose seen count crosses
+        the bound builds the bitmaps from the full seen set, and later
+        rounds probe and update them (``use_bloom=False``: a plain
+        anti-join instead).  Each round's ``seen_probe`` metric names
+        the shape it ran.
         """
         self.spark = spark
         self.workdir = workdir
@@ -268,7 +292,8 @@ class CrawlEngine:
             -(-expected_discovery // bloom_target_rows_per_bucket),
         )
         #: hash-only bucket cogroup + string re-attach (see
-        #: operators/seen.new_urls narrow path).  Default OFF: measured
+        #: operators/seen.new_urls narrow path; applies only once the
+        #: bloom is engaged, see below).  Default OFF: measured
         #: on this single box (tools/probe_ab.py, 2M rows, interleaved
         #: in-session reps) the narrow shape loses at EVERY seen
         #: fraction (0.1/0.6/0.9 -> wide 2.45/1.30/1.81 s vs narrow
@@ -283,12 +308,24 @@ class CrawlEngine:
         #: map-side partial combine before a probe-only cogroup), was
         #: also measured: beats narrow, still loses to wide here.
         self.narrow_probe = narrow_probe
+        #: WHEN the bloom engages: only once the tracked seen count
+        #: exceeds broadcast_fetched_max.  Until then the seen set's
+        #: hash column broadcasts, and one broadcast anti-join dedups
+        #: a round's links with no Python stage; a bloom there only
+        #: adds a pandas cogroup probe and OR-update per round
+        #: (BASELINE.md r2: plain anti-join 0.77 s vs bloom split-union
+        #: 1.12 s), as Spark's own runtime bloom filter skips joins it
+        #: can broadcast.  The first commit past the bound builds the
+        #: bitmaps from the full seen set (_next_bloom's build branch);
+        #: _bloom_built_round is the round of the latest COMMITTED
+        #: build, None while the bloom is not engaged.
+        self._bloom_built_round: int | None = None
         #: bloom bitmap sizing: ~10 bits/key => ~1% FP.  Bitmaps are
-        #: sized at init from the SEED count (x4 growth headroom) and
-        #: RE-SIZED + rebuilt at every compaction from the tracked seen
-        #: count — a fixed bitmap would saturate as the crawl grows
-        #: (at 4M seen keys the old fixed 2^17 bits/bucket ran at
-        #: ~1 bit/key, FP ~100%, so the whole discovery volume rode
+        #: sized at their first build from the seen count (x4 growth
+        #: headroom) and RE-SIZED + rebuilt at a later commit from the
+        #: tracked seen count — a fixed bitmap would saturate as the
+        #: crawl grows (at 4M seen keys the old fixed 2^17 bits/bucket
+        #: ran at ~1 bit/key, FP ~100%, so the whole discovery volume rode
         #: the exact anti-join and the bloom bypassed nothing).
         #: Saturation between compactions only degrades FP (the exact
         #: anti-join stays the authority); the next rebuild restores
@@ -310,7 +347,7 @@ class CrawlEngine:
         #: the smallest bitmap a bucket can have would make the
         #: bucket-growth loop spin forever chasing an unreachable size
         self.bloom_max_bucket_bytes = max(bloom_max_bucket_bytes, (1 << 17) // 8)
-        self._bloom_bits = 1 << 17  # re-derived at init()/compaction
+        self._bloom_bits = 1 << 17  # re-derived at each bloom build
         self._seen_rows = 0
         self.write_docs = write_docs
         self.compact_every = compact_every
@@ -420,6 +457,18 @@ class CrawlEngine:
     def _save_manifest(self):
         self.storage.save_manifest(self.manifest)
 
+    def _bloom_engaged(self) -> bool:
+        """A committed bloom exists for this round to probe."""
+        return self.use_bloom and self._bloom_built_round is not None
+
+    def _bloom_due(self) -> bool:
+        """The seen set has outgrown a broadcast: keep (or start) a
+        bloom."""
+        return self.use_bloom and (
+            self._bloom_engaged()
+            or self._seen_rows > self.broadcast_fetched_max
+        )
+
     # --- lifecycle --------------------------------------------------------
 
     def init(self, seeds):
@@ -444,7 +493,7 @@ class CrawlEngine:
         )
         # the seed count rides the frontier write as an Observation
         # (no separate count job): it seeds the arithmetic row
-        # trackers AND sizes the bloom bitmaps below
+        # trackers AND decides (and sizes) the bloom build below
         seed_obs = Observation()
         self._write(
             frontier.observe(seed_obs, F.count(F.lit(1)).alias("n")),
@@ -454,9 +503,11 @@ class CrawlEngine:
         n_seeds = _obs_count(seed_obs, "n")
         self._frontier_rows = n_seeds
         self._seen_rows = n_seeds
+        self._bloom_built_round = None
         # the remaining round-0 snapshots are independent of each other
-        # (only the bloom sizing needed n_seeds, known now) — submit
-        # them concurrently like the round commit's multi-sink pool
+        # (only the bloom decision and sizing needed n_seeds, known
+        # now) — submit them concurrently like the round commit's
+        # multi-sink pool
         init_writes = [
             (self._write, frontier.select("url", "url_hash"), "seen"),
             (
@@ -482,11 +533,14 @@ class CrawlEngine:
                 "robots",
             )
         )
-        if self.use_bloom:
-            # bitmaps sized for the seed set PLUS the a-priori
-            # discovery budget, x4 growth headroom (~bits_per_key
-            # bits/key => ~1% FP until the seen set quadruples past
-            # the estimate; the compaction rebuild below re-sizes).
+        bloom_at_init = self._bloom_due()
+        if bloom_at_init:
+            # a seed set past the broadcast bound engages the bloom
+            # from round 0.  Bitmaps sized for the seed set PLUS the
+            # a-priori discovery budget, x4 growth headroom
+            # (~bits_per_key bits/key => ~1% FP until the seen set
+            # quadruples past the estimate; a round's rebuild
+            # re-sizes).
             # Seed-only sizing forced an early full-seen-scan rebuild
             # on every crawl whose frontier outgrows its seeds; the
             # per-bucket byte bound still caps memory, growth beyond
@@ -515,18 +569,18 @@ class CrawlEngine:
                 )
             )
         with ThreadPoolExecutor(max_workers=len(init_writes)) as pool:
-            futures = [
+            _join_all([
                 pool.submit(fn, df, table, 0)
                 for fn, df, table in init_writes
-            ]
-            for fut in futures:
-                fut.result()
+            ])
         self.round = 0
         self._host_rows = 0
+        self._bloom_built_round = 0 if bloom_at_init else None
         self.manifest["rounds"] = []
         self.manifest["seen_full_rounds"] = [0]
         self.manifest["seen_rows"] = self._seen_rows
         self.manifest["bloom_bits"] = self._bloom_bits
+        self.manifest["bloom_built_round"] = self._bloom_built_round
         self._save_manifest()
 
     @classmethod
@@ -578,6 +632,11 @@ class CrawlEngine:
         eng.bloom_buckets = cfg.get("bloom_buckets", eng.bloom_buckets)
         eng._seen_rows = manifest.get("seen_rows", 0)
         eng._bloom_bits = manifest.get("bloom_bits", eng._bloom_bits)
+        # probe only a COMMITTED bloom: the manifest names the round of
+        # the latest committed build (null while the seen set still
+        # broadcasts).  A manifest written before the bloom was gated
+        # lacks the key, and its init always built bloom/r0.
+        eng._bloom_built_round = manifest.get("bloom_built_round", 0)
         return eng
 
     # --- production robots helpers -----------------------------------------
@@ -641,6 +700,90 @@ class CrawlEngine:
                 .alias("fetch_fails"),
             )
         )
+
+    # --- bloom maintenance --------------------------------------------------
+
+    def _next_bloom(
+        self, blooms: DataFrame | None, fresh: DataFrame, compacted: bool,
+        nxt: int,
+    ) -> tuple[DataFrame, int, bool] | None:
+        """Round ``nxt``'s bloom snapshot, as ``(df, buckets, built)``,
+        or None while the seen set still broadcasts (see
+        ``_bloom_due``).  ``built`` marks a full build from the seen
+        set — the first one past the broadcast bound, or a resize —
+        as opposed to an incremental OR-update of ``blooms``.  Reads
+        ``_seen_rows`` AFTER this round's new count was added, and
+        the seen snapshot of round ``nxt``, so it must run after the
+        seen write."""
+        if not self._bloom_due():
+            return None
+        # bucket-count growth: when the seen set has outgrown what the
+        # current count can hold at <= bloom_max_bucket_bytes per
+        # bucket, double buckets until it fits — safe only at a build,
+        # because it writes fresh bitmaps keyed by the new count and
+        # the manifest config updates in the same commit (probe
+        # bucketing must always match the on-disk build bucketing; see
+        # resume()).
+        want_buckets = self.bloom_buckets
+        while (
+            bloom_bits_for(
+                4 * self._seen_rows, want_buckets, self.bloom_bits_per_key,
+            )
+            > 8 * self.bloom_max_bucket_bytes
+        ):
+            want_buckets <<= 1
+        want_bits = bloom_bits_for(
+            4 * self._seen_rows, want_buckets, self.bloom_bits_per_key,
+        )
+        # upward-only (at unchanged bucket count): the seen set never
+        # shrinks, so a smaller want_bits can only mean lost tracking
+        # (e.g. a resumed pre-sizing manifest) — keep the larger
+        # on-disk geometry.  A bucket-count change always rebuilds
+        # (per-bucket bits legitimately shrink then), and so does the
+        # first commit past the broadcast bound (no bitmaps yet).
+        built = (
+            blooms is None
+            or want_buckets > self.bloom_buckets
+            or want_bits > self._bloom_bits
+        )
+        if built:
+            # FIRST BUILD or RESIZE + rebuild: without resizing a fixed
+            # bitmap saturates as the crawl grows (at 4M seen keys the
+            # old fixed 2^17 bits ran ~1 bit/key, FP~100%, and the
+            # bloom bypassed nothing — the whole discovery volume rode
+            # the exact anti-join it exists to bypass).  The build
+            # scans the full seen set: the just-rewritten compacted
+            # snapshot when this round compacted, else the bounded
+            # snapshot+delta union.  The x4 sizing headroom means a
+            # resize fires only when the seen set has QUADRUPLED past
+            # the last sizing — O(log growth) rebuilds over a whole
+            # crawl, each one seen-scan.
+            self._bloom_bits = want_bits
+            src = (
+                self._read("seen", nxt) if compacted
+                else self._seen_union(nxt)
+            )
+            bloom_df = build_bloom(
+                src, n_buckets=want_buckets, bits_per_bucket=want_bits,
+            )
+        else:
+            # incremental: OR this round's new hashes into the previous
+            # bitmaps partition-locally — never rescans seen history
+            # (existing bitmaps keep their stored geometry; the param
+            # only sizes brand-new buckets)
+            bloom_df = update_bloom(
+                blooms, fresh.select("url_hash"),
+                n_buckets=self.bloom_buckets,
+                bits_per_bucket=self._bloom_bits,
+            )
+        # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file at
+        # whatever geometry the bitmaps currently have
+        bloom_df = _coalesce_for_write(
+            bloom_df,
+            want_buckets,
+            rows_per_file=max(1, (64 << 20) // max(1, self._bloom_bits // 8)),
+        )
+        return bloom_df, want_buckets, built
 
     # --- one crawl round ---------------------------------------------------
 
@@ -946,14 +1089,29 @@ class CrawlEngine:
             # discovery time
             robots_prev = robots_prev.unionByName(prefetch_rules)
 
-        # 5. seen-set dedup FIRST: the in-bucket hash dedup rides the
-        #    bloom cogroup's url_hash-derived exchange (one exchange
-        #    for dedup + probe, replacing the former string-keyed
-        #    dropDuplicates shuffle — round-3 verdict's top lever), and
-        #    the exact anti-join sees only bloom suspects.  Only
-        #    (url, host_id, url_hash) travels through the exchange.
+        # 5. seen-set dedup FIRST.  While the seen set is within the
+        #    broadcast bound (no committed bloom), a hash-keyed
+        #    dropDuplicates feeds ONE broadcast anti-join against the
+        #    seen hashes: no Python stage, seen never shuffled.  Past
+        #    it, the in-bucket hash dedup rides the bloom cogroup's
+        #    url_hash-derived exchange (one exchange for dedup + probe
+        #    — round-3 verdict's top lever), and the exact anti-join
+        #    sees only bloom suspects.  Only (url, host_id, url_hash)
+        #    travels through the exchange.
         seen = self._seen_union(r)
-        blooms = self._read("bloom", r) if self.use_bloom else None
+        #    Without a bloom (use_bloom=False) a seen set past the
+        #    bound is a plain anti-join: AQE picks the strategy, as in
+        #    frontier_anti_join.
+        blooms = None
+        seen_keys = seen
+        if self._bloom_engaged():
+            seen_probe = "bloom"
+            blooms = self._read("bloom", r)
+        elif self._seen_rows <= self.broadcast_fetched_max:
+            seen_probe = "broadcast"
+            seen_keys = F.broadcast(seen.select("url_hash"))
+        else:
+            seen_probe = "shuffle"
         bloom_caches: list = []
         discovered = candidates_raw.select(
             "url", "host_id", url_hash(F.col("url")).alias("url_hash")
@@ -963,7 +1121,7 @@ class CrawlEngine:
         # the new-host robots lookup and the robots vet below
         new_keys = new_urls(
             discovered,
-            seen,
+            seen_keys,
             blooms,
             n_buckets=self.bloom_buckets,
             persisted_out=bloom_caches,
@@ -1178,145 +1336,87 @@ class CrawlEngine:
         # the seen write pulls `fresh` through its persist (and fires
         # the n_new observation) on the MAIN thread while the early
         # cache-only writes run beside it; frontier/bloom/robots are
-        # submitted only after it returns (see the step-8 note above)
-        pool = ThreadPoolExecutor(max_workers=8)
-        futures = [
-            pool.submit(self._write, df, table, nxt)
-            for df, table in early_writes
-        ]
-        futures.append(
-            pool.submit(
-                self._write_per_host, host_state_next, "host_state", nxt
+        # submitted only after it returns (see the step-8 note above).
+        # One pool spans the whole commit: every exit path — a raising
+        # seen write included — joins the early writes and surfaces
+        # their errors before the round fails (no leaked threads, no
+        # unobserved failures).
+        with ThreadPoolExecutor(
+            max_workers=8, thread_name_prefix="crawl-commit"
+        ) as pool:
+            futures = [
+                pool.submit(self._write, df, table, nxt)
+                for df, table in early_writes
+            ]
+            futures.append(
+                pool.submit(
+                    self._write_per_host, host_state_next, "host_state", nxt
+                )
             )
-        )
-        self._write(*seen_write, nxt)
-        # the seen write carries the whole discovery+dedup pipeline
-        # (explode -> canonicalize -> robots filter -> bloom/anti-join),
-        # so it gets its own section: 'commit' below is pure snapshot-
-        # write cost, comparable round-to-round
-        _mark("seen_dedup")
-        # the n_new observation fired with the seen write above; the
-        # tracked seen count sizes the compaction bloom rebuild below
-        n_new = _obs_count(n_new_obs, "n_new")
-        self._seen_rows += n_new
-        kept_obs = None
-        frontier_df = next_frontier
-        if has_err and n_errors > 0:
-            # retry-capped drops make the arithmetic row tracker drift;
-            # an Observation on the kept branch rides the frontier
-            # write and restores the exact count
-            kept_obs = Observation()
-            frontier_df = kept.observe(
-                kept_obs, F.count(F.lit(1)).alias("n_kept")
-            ).unionByName(fresh)
-        late_writes = [
-            (
-                _coalesce_for_write(
-                    frontier_df, self._frontier_rows + 8 * n_fetched
-                ),
-                "frontier",
-            )
-        ]
-        if self.use_bloom:
-            # bucket-count growth: when the seen set has outgrown what
-            # the current count can hold at <= bloom_max_bucket_bytes
-            # per bucket, double buckets until it fits — safe only
-            # here, because the rebuild below writes fresh bitmaps
-            # keyed by the new count and the manifest config updates
-            # in the same commit (probe bucketing must always match
-            # the on-disk build bucketing; see resume()).
-            want_buckets = self.bloom_buckets
-            while (
-                bloom_bits_for(
-                    4 * self._seen_rows, want_buckets,
-                    self.bloom_bits_per_key,
-                )
-                > 8 * self.bloom_max_bucket_bytes
-            ):
-                want_buckets <<= 1
-            want_bits = bloom_bits_for(
-                4 * self._seen_rows, want_buckets,
-                self.bloom_bits_per_key,
-            )
-            # upward-only (at unchanged bucket count): the seen set
-            # never shrinks, so a smaller want_bits can only mean lost
-            # tracking (e.g. a resumed pre-sizing manifest) — keep the
-            # larger on-disk geometry.  A bucket-count change always
-            # rebuilds (per-bucket bits legitimately shrink then).
-            if want_buckets > self.bloom_buckets or want_bits > self._bloom_bits:
-                # RESIZE + rebuild: without this a fixed bitmap
-                # saturates as the crawl grows (at 4M seen keys the
-                # old fixed 2^17 bits ran ~1 bit/key, FP~100%, and the
-                # bloom bypassed nothing — the whole discovery volume
-                # rode the exact anti-join it exists to bypass).  The
-                # rebuild scans the full seen set: the just-rewritten
-                # compacted snapshot when this round compacted, else
-                # the bounded snapshot+delta union.  The x4 sizing
-                # headroom means this fires only when the seen set has
-                # QUADRUPLED past the last sizing — O(log growth)
-                # rebuilds over a whole crawl, each one seen-scan.
-                self._bloom_bits = want_bits
-                rebuild_src = (
-                    self._read("seen", nxt)
-                    if compacted
-                    else self._seen_union(nxt)
-                )
-                bloom_df = build_bloom(
-                    rebuild_src,
-                    n_buckets=want_buckets,
-                    bits_per_bucket=self._bloom_bits,
-                )
-            else:
-                # incremental: OR this round's new hashes into the
-                # previous bitmaps partition-locally — never rescans
-                # seen history (existing bitmaps keep their stored
-                # geometry; the param only sizes brand-new buckets)
-                bloom_df = update_bloom(
-                    blooms, fresh.select("url_hash"),
-                    n_buckets=self.bloom_buckets,
-                    bits_per_bucket=self._bloom_bits,
-                )
-            # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file
-            # at whatever geometry the bitmaps currently have
-            late_writes.append(
-                (
-                    _coalesce_for_write(
-                        bloom_df,
-                        want_buckets,
-                        rows_per_file=max(
-                            1, (64 << 20) // max(1, self._bloom_bits // 8)
+            try:
+                self._write(*seen_write, nxt)
+                # the seen write carries the whole discovery+dedup
+                # pipeline (explode -> canonicalize -> robots filter ->
+                # anti-join), so it gets its own section: 'commit'
+                # below is pure snapshot-write cost, comparable
+                # round-to-round
+                _mark("seen_dedup")
+                # the n_new observation fired with the seen write
+                # above; the tracked seen count decides and sizes the
+                # bloom build below
+                n_new = _obs_count(n_new_obs, "n_new")
+                self._seen_rows += n_new
+                kept_obs = None
+                frontier_df = next_frontier
+                if has_err and n_errors > 0:
+                    # retry-capped drops make the arithmetic row
+                    # tracker drift; an Observation on the kept branch
+                    # rides the frontier write and restores the exact
+                    # count
+                    kept_obs = Observation()
+                    frontier_df = kept.observe(
+                        kept_obs, F.count(F.lit(1)).alias("n_kept")
+                    ).unionByName(fresh)
+                late_writes = [
+                    (
+                        _coalesce_for_write(
+                            frontier_df, self._frontier_rows + 8 * n_fetched
                         ),
-                    ),
-                    "bloom",
+                        "frontier",
+                    )
+                ]
+                bloom_next = self._next_bloom(blooms, fresh, compacted, nxt)
+                if bloom_next is not None:
+                    late_writes.append((bloom_next[0], "bloom"))
+                # robots is per-host (write_small fast path) but
+                # consumes new_rules -> new_keys, so it belongs to the
+                # late batch
+                futures += [
+                    pool.submit(self._write, df, table, nxt)
+                    for df, table in late_writes
+                ]
+                futures.append(
+                    pool.submit(self._write_per_host, robots, "robots", nxt)
                 )
-            )
-        # robots is per-host (write_small fast path) but consumes
-        # new_rules -> new_keys, so it belongs to the late batch
-        futures += [
-            pool.submit(self._write, df, table, nxt)
-            for df, table in late_writes
-        ]
-        futures.append(
-            pool.submit(self._write_per_host, robots, "robots", nxt)
-        )
-        try:
-            for fut in futures:
-                fut.result()
-        finally:
-            pool.shutdown()
+            finally:
+                _join_all(futures)
         if compacted:
             # record the full snapshot only AFTER its write succeeded —
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
-        if self.use_bloom and want_buckets != self.bloom_buckets:
-            # switch the engine to the grown bucket count only AFTER
-            # the rebuilt bitmaps landed: probe bucketing must always
-            # match the latest COMMITTED build (a failed write must
-            # leave the next probe on the old geometry, in-process or
-            # via resume — the manifest below commits both together)
+        if bloom_next is not None:
+            _, want_buckets, built = bloom_next
+            # switch the engine to a grown bucket count, and to probing
+            # a newly built bloom, only AFTER the bitmaps landed: the
+            # probe must always match the latest COMMITTED build (a
+            # failed write must leave the next probe on the old
+            # geometry or the broadcast path, in-process or via resume
+            # — the manifest below commits them together)
             self.bloom_buckets = want_buckets
             self.manifest["config"]["bloom_buckets"] = want_buckets
+            if built:
+                self._bloom_built_round = nxt
         n_denied = (
             _obs_count(denied_obs, "n_denied") if denied_obs is not None else 0
         )
@@ -1346,6 +1446,10 @@ class CrawlEngine:
             "discovered_new": n_new,
             "fetch_errors": n_errors,
             "robots_cache_misses": cache_misses,
+            # how this round deduped against seen: "broadcast" (one
+            # broadcast anti-join), "bloom" (bloom probe + suspect
+            # anti-join) or "shuffle" (use_bloom=False past the bound)
+            "seen_probe": seen_probe,
             "wall_sec": round(time.time() - t0, 3),
             "sections": sections,
             "lineage": lineage,
@@ -1355,6 +1459,7 @@ class CrawlEngine:
         self.manifest["rounds"].append(metrics)
         self.manifest["seen_rows"] = self._seen_rows
         self.manifest["bloom_bits"] = self._bloom_bits
+        self.manifest["bloom_built_round"] = self._bloom_built_round
         self.round = nxt
         self._save_manifest()
         return metrics

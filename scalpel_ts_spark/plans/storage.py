@@ -84,15 +84,16 @@ class ParquetSnapshotStorage:
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
         self.workdir = workdir
-        #: per-table schema cache — METADATA only (the engine writes
-        #: these tables itself, so the schema of round N's read is the
-        #: schema of the round-N write).  Passing it explicitly on
-        #: read skips parquet schema inference, which cost one
+        #: per-(table, round) schema cache — METADATA only (the engine
+        #: writes these tables itself, so the schema of round N's read
+        #: is the schema of the round-N write).  Passing it explicitly
+        #: on read skips parquet schema inference, which cost one
         #: footer-read job per table per round (~6 extra tiny jobs a
-        #: round on a 43-job round loop, r6 profile).  Keyed per
-        #: TABLE, not per round: a table whose schema legitimately
-        #: changes between rounds (fetch_log gaining a status column)
-        #: refreshes the entry on write.
+        #: round on a 43-job round loop, r6 profile).  Keyed per ROUND
+        #: too: a table whose schema changes between rounds (fetch_log
+        #: gaining a status column) must not read its older rounds
+        #: under the newer schema — they would be silently null-filled,
+        #: or fail to scan after a dropped or retyped column.
         self._schemas: dict = {}
 
     def _path(self, table: str, rnd: int) -> str:
@@ -100,7 +101,7 @@ class ParquetSnapshotStorage:
 
     def write(self, df: DataFrame, table: str, rnd: int) -> None:
         df.write.mode("overwrite").parquet(self._path(table, rnd))
-        self._schemas[table] = df.schema
+        self._schemas[(table, rnd)] = df.schema
 
     def write_small(self, df: DataFrame, table: str, rnd: int) -> None:
         """Collect-to-driver + single pyarrow parquet file.
@@ -120,19 +121,22 @@ class ParquetSnapshotStorage:
             shutil.rmtree(path)
         os.makedirs(path)
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-        self._schemas[table] = df.schema
+        self._schemas[(table, rnd)] = df.schema
 
-    def _reader(self, table: str):
-        schema = self._schemas.get(table)
-        if schema is not None:
-            return self.spark.read.schema(schema)
+    def _reader(self, table: str, rounds: Sequence[int]):
+        """A reader with the cached schema when every requested round
+        has the SAME cached schema; otherwise parquet infers it."""
+        schemas = {self._schemas.get((table, r)) for r in rounds}
+        if len(schemas) == 1 and None not in schemas:
+            return self.spark.read.schema(schemas.pop())
         return self.spark.read
 
     def read(self, table: str, rnd: int) -> DataFrame:
-        return self._reader(table).parquet(self._path(table, rnd))
+        return self._reader(table, [rnd]).parquet(self._path(table, rnd))
 
     def read_union(self, table: str, rounds: Sequence[int]) -> DataFrame:
-        return self._reader(table).parquet(
+        rounds = list(rounds)
+        return self._reader(table, rounds).parquet(
             *[self._path(table, r) for r in rounds]
         )
 
@@ -154,6 +158,7 @@ class ParquetSnapshotStorage:
         if os.path.exists(self.workdir):
             shutil.rmtree(self.workdir)
         os.makedirs(self.workdir)
+        self._schemas.clear()
 
 
 class IcebergSnapshotStorage:

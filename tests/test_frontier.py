@@ -67,21 +67,28 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
 
 
 def test_bloom_prefilter_is_transparent(spark, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("crawl_nobloom"))
-    eng = CrawlEngine(
-        spark,
-        wd,
-        n_hosts=N_HOSTS,
-        cap=8,
-        refill=4,
-        use_bloom=False,
-        write_docs=False,
-    )
-    eng.init(SEEDS)
-    eng.run(ROUNDS)
+    # with the seen set past the broadcast bound
+    # (broadcast_fetched_max=0): a plain shuffled anti-join with no
+    # bloom, and a bloom probed from round 1 on (engaged at init), both
+    # equal the simulator
     sim = _sim()
-    assert _engine_log(eng) == _sim_log(sim)
-    assert {r.url for r in eng.seen().collect()} == sim.seen
+    for use_bloom, want in ((False, "shuffle"), (True, "bloom")):
+        wd = str(tmp_path_factory.mktemp("crawl_nobloom"))
+        eng = CrawlEngine(
+            spark,
+            wd,
+            n_hosts=N_HOSTS,
+            cap=8,
+            refill=4,
+            use_bloom=use_bloom,
+            write_docs=False,
+            broadcast_fetched_max=0,
+        )
+        eng.init(SEEDS)
+        metrics = eng.run(ROUNDS)
+        assert {m["seen_probe"] for m in metrics} == {want}
+        assert _engine_log(eng) == _sim_log(sim)
+        assert {r.url for r in eng.seen().collect()} == sim.seen
 
 
 def test_narrow_probe_matches_simulator(spark, tmp_path_factory, sim_state):
@@ -93,6 +100,7 @@ def test_narrow_probe_matches_simulator(spark, tmp_path_factory, sim_state):
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
         narrow_probe=True, write_docs=False,
+        broadcast_fetched_max=0,  # the narrow shape is a bloom probe
     )
     eng.init(SEEDS)
     eng.run(ROUNDS)
@@ -199,6 +207,7 @@ def test_non_default_bloom_buckets_match_simulator(
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
         bloom_buckets=7, write_docs=False,
+        broadcast_fetched_max=0,  # engage the bloom from round 0
     )
     eng.init(SEEDS)
     eng.run(ROUNDS)
@@ -248,6 +257,7 @@ def test_bloom_resizes_as_seen_grows(spark, tmp_path_factory, sim_state):
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
         compact_every=2, bloom_bits_per_key=100_000, write_docs=False,
         bloom_presize_keys=0,
+        broadcast_fetched_max=0,  # engage the bloom from round 0
     )
     eng.init(SEEDS)
     assert eng._bloom_bits == 1 << 17  # 3 seeds: floor geometry
@@ -286,7 +296,8 @@ def test_bloom_bucket_count_pinned_on_resume(spark, tmp_path_factory):
 
     wd = str(tmp_path_factory.mktemp("crawl_bucketpin"))
     eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        broadcast_fetched_max=0,  # engage the bloom from round 0
     )
     eng.init(SEEDS)
     eng.run(2)
@@ -318,6 +329,7 @@ def test_bloom_bucket_count_grows_at_rebuild(spark, tmp_path_factory, sim_state)
         bloom_buckets=2, bloom_bits_per_key=100_000,
         bloom_max_bucket_bytes=1,  # clamps to the 16 KiB floor
         write_docs=False,
+        broadcast_fetched_max=0,  # engage the bloom from round 0
     )
     eng.init(SEEDS)
     assert eng.bloom_buckets == 2
@@ -777,6 +789,7 @@ def test_bloom_presized_for_discovery_budget_avoids_rebuild(
     wd = str(tmp_path_factory.mktemp("crawl_bloompresize"))
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        broadcast_fetched_max=0,  # engage the bloom from round 0
     )
     eng.init(SEEDS)
     sized = eng._bloom_bits
@@ -789,3 +802,85 @@ def test_bloom_presized_for_discovery_budget_avoids_rebuild(
     assert eng._seen_rows > 4 * len(SEEDS)  # grew well past the seeds
     assert eng._bloom_bits == sized  # ...with no resize/rebuild
     assert eng.bloom_buckets == eng.manifest["config"]["bloom_buckets"]
+
+
+def test_bloom_engages_past_broadcast_bound(spark, tmp_path_factory, sim_state):
+    # the seen set broadcasts while it is within broadcast_fetched_max
+    # and no bloom is built; the first commit past the bound builds one
+    # from the full seen set, and later rounds (resumed or not) probe
+    # it.  The 3-seed crawl holds 19 seen rows after r1 and 95 after r2,
+    # so a bound of 50 is crossed at the r2 commit.
+    import json
+    import os
+
+    wd = str(tmp_path_factory.mktemp("crawl_bloomgate"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        broadcast_fetched_max=50,
+    )
+    eng.init(SEEDS)
+    (m1,) = eng.run(1)
+    assert m1["seen_probe"] == "broadcast"
+    assert not os.path.exists(os.path.join(wd, "bloom"))
+    assert eng.manifest["bloom_built_round"] is None
+    (m2,) = eng.run(1)
+    assert eng._seen_rows > 50
+    assert m2["seen_probe"] == "broadcast"  # probed before the build
+    assert os.listdir(os.path.join(wd, "bloom")) == ["r2"]
+    assert eng.manifest["bloom_built_round"] == 2
+    # resume after the crossing round probes the committed bloom
+    eng2 = CrawlEngine.resume(spark, wd)
+    (m3,) = eng2.run(1)
+    assert m3["seen_probe"] == "bloom"
+    # a manifest written before the bloom was gated has no
+    # bloom_built_round: its bloom exists at every round, so it
+    # resumes with the bloom engaged
+    mpath = os.path.join(wd, "manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["bloom_built_round"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    eng3 = CrawlEngine.resume(spark, wd)
+    (m4,) = eng3.run(1)
+    assert m4["seen_probe"] == "bloom"
+    assert _engine_log(eng3) == _sim_log(sim_state)
+    assert {r.url for r in eng3.seen().collect()} == sim_state.seen
+
+
+def test_failed_seen_write_joins_commit_pool(spark, tmp_path_factory, sim_state):
+    # a seen write that raises on the main thread must still join the
+    # concurrent early writes (no commit-pool thread left alive), leave
+    # the committed manifest untouched, and resume to the simulator
+    import threading
+
+    from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
+
+    class SeenWriteFails(ParquetSnapshotStorage):
+        def write(self, df, table, rnd):
+            if (table, rnd) == ("seen", 1):
+                raise OSError("injected seen write failure")
+            super().write(df, table, rnd)
+
+    wd = str(tmp_path_factory.mktemp("crawl_seenfail"))
+    storage = SeenWriteFails(spark, wd)
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        storage=storage,
+    )
+    eng.init(SEEDS)
+    before = storage.load_manifest()
+    threads_before = set(threading.enumerate())
+    with pytest.raises(OSError, match="injected seen write failure"):
+        eng.run_round()
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in threads_before and t.is_alive()
+    ]
+    assert not leaked
+    assert storage.load_manifest() == before
+    eng2 = CrawlEngine.resume(spark, wd)
+    assert eng2.round == 0
+    eng2.run(ROUNDS)
+    assert _engine_log(eng2) == _sim_log(sim_state)
+    assert {r.url for r in eng2.seen().collect()} == sim_state.seen

@@ -85,3 +85,22 @@ def test_protocol_required_stubs_raise():
     # the OPTIONAL write_small stub stays inert (identity-filtered by
     # resolve_write_small, never called)
     assert Missing().write_small(None, "t", 0) is None
+
+
+def test_schema_cache_is_per_round(spark, tmp_path):
+    """A table whose schema changes between rounds reads each round
+    back under that round's own written schema: r1 has no ``status``
+    column, so it must not come back with a null-filled one."""
+    st = ParquetSnapshotStorage(spark, str(tmp_path))
+    st.write(spark.createDataFrame([(1, "a")], "id long, url string"), "t", 1)
+    st.write(
+        spark.createDataFrame([(2, "b", 404)], "id long, url string, status int"),
+        "t", 2,
+    )
+    r1 = st.read("t", 1)
+    assert r1.columns == ["id", "url"]
+    assert [tuple(r) for r in r1.collect()] == [(1, "a")]
+    assert st.read("t", 2).columns == ["id", "url", "status"]
+    # a union across the schema change is inferred, not forced onto
+    # either round's cached schema
+    assert sorted(r.id for r in st.read_union("t", [1, 2]).collect()) == [1, 2]
