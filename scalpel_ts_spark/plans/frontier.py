@@ -24,6 +24,13 @@ One crawl round is one Spark job pipeline over snapshot tables:
                      bloom' (once engaged), manifest (metrics +
                      per-partition lineage)
 
+``CrawlEngine.run_round`` runs these steps as stage methods
+(``_select``, ``_vet_first_contact``, ``_fetch_extract``,
+``_discover_dedup``, ``_next_frontier``, ``_commit``) inside one
+:class:`RoundScope`, which owns the round's cached frames and commit
+pool on every exit.  The engine's row trackers and the manifest move
+only after every write of the round has landed.
+
 Storage goes through the :mod:`scalpel_ts_spark.plans.storage` seam:
 the sandbox uses ``ParquetSnapshotStorage`` (every table versioned by
 round under ``workdir/<table>/r<N>``, manifest as JSON), a cluster uses
@@ -46,6 +53,7 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -139,6 +147,96 @@ def _join_all(futures) -> None:
         raise errors[0]
 
 
+class RoundScope:
+    """Owns what one crawl round (or ``init_df``) opens: the frames it
+    persists, the ``crawl-commit`` write pool, and the per-section wall
+    clock.  On every exit — commit, the zero-fetch early return, or an
+    exception — it first joins every submitted write through
+    :func:`_join_all`, then unpersists every recorded frame, so a
+    failed write leaks no thread and no cache."""
+
+    def __init__(self):
+        #: frames unpersisted at exit; operators that persist
+        #: internally append theirs through ``persisted_out``
+        self.cached: list = []
+        self.sections: dict = {}
+        self.started = self._last = time.time()
+        self._pool: ThreadPoolExecutor | None = None
+        self._futures: list = []
+
+    def __enter__(self) -> "RoundScope":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        try:
+            self.join()
+        finally:
+            if self._pool is not None:
+                self._pool.shutdown()
+            for df in self.cached:
+                df.unpersist()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self.cached.append(df)
+        return df
+
+    def submit(self, fn, *args) -> None:
+        """Run ``fn(*args)`` on the commit pool (started on first use)."""
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(
+                max_workers=8, thread_name_prefix="crawl-commit"
+            )
+        self._futures.append(self._pool.submit(fn, *args))
+
+    def join(self) -> None:
+        """Wait for every write submitted so far."""
+        futures, self._futures = self._futures, []
+        _join_all(futures)
+
+    def mark(self, label: str) -> None:
+        """Charge the wall time since the previous mark to ``label``."""
+        now = time.time()
+        self.sections[label] = round(
+            self.sections.get(label, 0.0) + now - self._last, 3
+        )
+        self._last = now
+
+
+class _FirstContact(NamedTuple):  # the robots pre-vet's frames
+    candidates: DataFrame  # the batch without denied first-contact rows
+    denied: DataFrame  # url_hash of the denied rows
+    rules: DataFrame  # robots rows fetched for the first-contact hosts
+    sites: DataFrame  # those hosts' (host_id, url)
+    obs: Observation  # n_prefetch
+
+
+class _Fetched(NamedTuple):
+    fetched: DataFrame  # fetched rows, errored rows excluded
+    content: DataFrame  # fetched rows whose body is corpus + link source
+    errored: DataFrame | None  # errored rows, None when there are none
+    has_status: bool
+    lineage: list
+    n_fetched: int
+    n_errors: int
+
+
+class _Discovered(NamedTuple):
+    fresh: DataFrame  # genuinely new, robots-allowed URLs (persisted)
+    robots: DataFrame  # the next robots cache
+    robots_obs: Observation  # n_new_rules
+    seen: DataFrame
+    blooms: DataFrame | None
+    seen_probe: str
+
+
+class _NextFrontier(NamedTuple):
+    frontier: DataFrame
+    host_state: DataFrame
+    kept_obs: Observation | None  # n_kept, when retry drops are possible
+    denied_obs: Observation | None  # n_denied, production robots path
+
+
 def _coalesce_for_write(
     df: DataFrame, est_rows: int, rows_per_file: int = 262_144
 ) -> DataFrame:
@@ -199,7 +297,6 @@ class CrawlEngine:
         bloom_bits_per_key: int = 10,
         bloom_max_bucket_bytes: int = 64 << 20,
         bloom_presize_keys: int | None = None,
-        narrow_probe: bool = False,
         write_docs: bool = True,
         compact_every: int = 8,
         storage: SnapshotStorage | None = None,
@@ -291,23 +388,6 @@ class CrawlEngine:
             bloom_buckets,
             -(-expected_discovery // bloom_target_rows_per_bucket),
         )
-        #: hash-only bucket cogroup + string re-attach (see
-        #: operators/seen.new_urls narrow path; applies only once the
-        #: bloom is engaged, see below).  Default OFF: measured
-        #: on this single box (tools/probe_ab.py, 2M rows, interleaved
-        #: in-session reps) the narrow shape loses at EVERY seen
-        #: fraction (0.1/0.6/0.9 -> wide 2.45/1.30/1.81 s vs narrow
-        #: 3.50/1.78/2.35 s) because its extra candidate scan +
-        #: broadcast barrier + re-attach aggregate outweigh the Arrow
-        #: width saving when the "exchange" is local DRAM.  On a real
-        #: multi-executor cluster the bucket exchange is NETWORK: 8 B
-        #: vs ~100 B per discovered link is a ~10x traffic cut, so the
-        #: flag is the deploy-time knob for network-bound shuffles
-        #: (results are identical either way — equality-tested).  A
-        #: third shape, JVM pre-aggregate dedup (new_urls(preagg=True),
-        #: map-side partial combine before a probe-only cogroup), was
-        #: also measured: beats narrow, still loses to wide here.
-        self.narrow_probe = narrow_probe
         #: WHEN the bloom engages: only once the tracked seen count
         #: exceeds broadcast_fetched_max.  Until then the seen set's
         #: hash column broadcasts, and one broadcast anti-join dedups
@@ -383,7 +463,6 @@ class CrawlEngine:
             "bloom_bits_per_key": self.bloom_bits_per_key,
             "bloom_max_bucket_bytes": self.bloom_max_bucket_bytes,
             "bloom_presize_keys": self.bloom_presize_keys,
-            "narrow_probe": self.narrow_probe,
             "compact_every": self.compact_every,
             "max_fetch_retries": self.max_fetch_retries,
             "broadcast_fetched_max": self.broadcast_fetched_max,
@@ -461,14 +540,6 @@ class CrawlEngine:
         """A committed bloom exists for this round to probe."""
         return self.use_bloom and self._bloom_built_round is not None
 
-    def _bloom_due(self) -> bool:
-        """The seen set has outgrown a broadcast: keep (or start) a
-        bloom."""
-        return self.use_bloom and (
-            self._bloom_engaged()
-            or self._seen_rows > self.broadcast_fetched_max
-        )
-
     # --- lifecycle --------------------------------------------------------
 
     def init(self, seeds):
@@ -501,9 +572,6 @@ class CrawlEngine:
             0,
         )
         n_seeds = _obs_count(seed_obs, "n")
-        self._frontier_rows = n_seeds
-        self._seen_rows = n_seeds
-        self._bloom_built_round = None
         # the remaining round-0 snapshots are independent of each other
         # (only the bloom decision and sizing needed n_seeds, known
         # now) — submit them concurrently like the round commit's
@@ -533,7 +601,10 @@ class CrawlEngine:
                 "robots",
             )
         )
-        bloom_at_init = self._bloom_due()
+        bits = self._bloom_bits
+        bloom_at_init = (
+            self.use_bloom and n_seeds > self.broadcast_fetched_max
+        )
         if bloom_at_init:
             # a seed set past the broadcast bound engages the bloom
             # from round 0.  Bitmaps sized for the seed set PLUS the
@@ -548,32 +619,31 @@ class CrawlEngine:
             presize = self.bloom_presize_keys
             if presize is None:
                 presize = self._expected_discovery
-            self._bloom_bits = bloom_bits_for(
+            bits = bloom_bits_for(
                 4 * (n_seeds + presize),
                 self.bloom_buckets,
                 self.bloom_bits_per_key,
             )
-            while self._bloom_bits > 8 * self.bloom_max_bucket_bytes and (
-                self._bloom_bits > 1 << 17
-            ):
-                self._bloom_bits >>= 1
+            while bits > 8 * self.bloom_max_bucket_bytes and bits > 1 << 17:
+                bits >>= 1
             init_writes.append(
                 (
                     self._write,
                     build_bloom(
                         frontier,
                         n_buckets=self.bloom_buckets,
-                        bits_per_bucket=self._bloom_bits,
+                        bits_per_bucket=bits,
                     ),
                     "bloom",
                 )
             )
-        with ThreadPoolExecutor(max_workers=len(init_writes)) as pool:
-            _join_all([
-                pool.submit(fn, df, table, 0)
-                for fn, df, table in init_writes
-            ])
+        with RoundScope() as scope:
+            for fn, df, table in init_writes:
+                scope.submit(fn, df, table, 0)
         self.round = 0
+        self._frontier_rows = n_seeds
+        self._seen_rows = n_seeds
+        self._bloom_bits = bits
         self._host_rows = 0
         self._bloom_built_round = 0 if bloom_at_init else None
         self.manifest["rounds"] = []
@@ -600,13 +670,16 @@ class CrawlEngine:
         storage = storage or ParquetSnapshotStorage(spark, workdir)
         manifest = storage.load_manifest()
         cfg = manifest["config"]
+        # narrow_probe selected a seen-probe shape that no longer
+        # exists; manifests written while it did still carry it
+        cfg.pop("narrow_probe", None)
         eng = cls(
             spark,
             workdir,
             storage=storage,
             fetch_stage=fetch_stage,
             robots_stage=robots_stage,
-            **{k: cfg[k] for k in cfg},
+            **cfg,
         )
         eng.manifest = manifest
         eng.round = len(manifest["rounds"])
@@ -705,17 +778,20 @@ class CrawlEngine:
 
     def _next_bloom(
         self, blooms: DataFrame | None, fresh: DataFrame, compacted: bool,
-        nxt: int,
-    ) -> tuple[DataFrame, int, bool] | None:
-        """Round ``nxt``'s bloom snapshot, as ``(df, buckets, built)``,
-        or None while the seen set still broadcasts (see
-        ``_bloom_due``).  ``built`` marks a full build from the seen
-        set — the first one past the broadcast bound, or a resize —
-        as opposed to an incremental OR-update of ``blooms``.  Reads
-        ``_seen_rows`` AFTER this round's new count was added, and
-        the seen snapshot of round ``nxt``, so it must run after the
-        seen write."""
-        if not self._bloom_due():
+        nxt: int, seen_rows: int,
+    ) -> tuple[DataFrame, int, int, bool] | None:
+        """Round ``nxt``'s bloom snapshot, as ``(df, buckets, bits,
+        built)``, or None while the seen set still broadcasts: no bloom
+        is engaged and ``seen_rows`` (the seen count after this round)
+        is within ``broadcast_fetched_max``.  ``built`` marks a full
+        build from the seen set — the first one past the broadcast
+        bound, or a resize — as opposed to an incremental OR-update of
+        ``blooms``.  Reads the seen snapshot of round ``nxt``, so it
+        must run after the seen write."""
+        if not (
+            self._bloom_engaged()
+            or (self.use_bloom and seen_rows > self.broadcast_fetched_max)
+        ):
             return None
         # bucket-count growth: when the seen set has outgrown what the
         # current count can hold at <= bloom_max_bucket_bytes per
@@ -727,13 +803,13 @@ class CrawlEngine:
         want_buckets = self.bloom_buckets
         while (
             bloom_bits_for(
-                4 * self._seen_rows, want_buckets, self.bloom_bits_per_key,
+                4 * seen_rows, want_buckets, self.bloom_bits_per_key,
             )
             > 8 * self.bloom_max_bucket_bytes
         ):
             want_buckets <<= 1
         want_bits = bloom_bits_for(
-            4 * self._seen_rows, want_buckets, self.bloom_bits_per_key,
+            4 * seen_rows, want_buckets, self.bloom_bits_per_key,
         )
         # upward-only (at unchanged bucket count): the seen set never
         # shrinks, so a smaller want_bits can only mean lost tracking
@@ -746,6 +822,7 @@ class CrawlEngine:
             or want_buckets > self.bloom_buckets
             or want_bits > self._bloom_bits
         )
+        bits = self._bloom_bits
         if built:
             # FIRST BUILD or RESIZE + rebuild: without resizing a fixed
             # bitmap saturates as the crawl grows (at 4M seen keys the
@@ -758,13 +835,13 @@ class CrawlEngine:
             # resize fires only when the seen set has QUADRUPLED past
             # the last sizing — O(log growth) rebuilds over a whole
             # crawl, each one seen-scan.
-            self._bloom_bits = want_bits
+            bits = want_bits
             src = (
                 self._read("seen", nxt) if compacted
                 else self._seen_union(nxt)
             )
             bloom_df = build_bloom(
-                src, n_buckets=want_buckets, bits_per_bucket=want_bits,
+                src, n_buckets=want_buckets, bits_per_bucket=bits,
             )
         else:
             # incremental: OR this round's new hashes into the previous
@@ -774,35 +851,54 @@ class CrawlEngine:
             bloom_df = update_bloom(
                 blooms, fresh.select("url_hash"),
                 n_buckets=self.bloom_buckets,
-                bits_per_bucket=self._bloom_bits,
+                bits_per_bucket=bits,
             )
         # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file at
         # whatever geometry the bitmaps currently have
         bloom_df = _coalesce_for_write(
             bloom_df,
             want_buckets,
-            rows_per_file=max(1, (64 << 20) // max(1, self._bloom_bits // 8)),
+            rows_per_file=max(1, (64 << 20) // max(1, bits // 8)),
         )
-        return bloom_df, want_buckets, built
+        return bloom_df, want_buckets, bits, built
 
     # --- one crawl round ---------------------------------------------------
 
     def run_round(self) -> dict:
+        # the stages below open every cache and commit write inside
+        # one RoundScope, which releases them on any exit
         r = self.round
-        t0 = time.time()
-        sections: dict = {}
-        _last = [t0]
-
-        def _mark(label: str):
-            now = time.time()
-            sections[label] = round(
-                sections.get(label, 0.0) + now - _last[0], 3
+        with RoundScope() as scope:
+            frontier = self._read("frontier", r)
+            candidates, new_state, frontier_rows, fetch_par = self._select(
+                scope, frontier, self._read("host_state", r)
             )
-            _last[0] = now
+            robots_prev = self._read("robots", r)
+            first = None
+            if self.robots_stage is not None:
+                first = self._vet_first_contact(scope, candidates, robots_prev)
+                candidates = first.candidates
+            fx = self._fetch_extract(scope, candidates, fetch_par, r)
+            scope.mark("fetch_extract")
+            # a zero-fetch round still COMMITS when the robots pre-vet
+            # denied candidates: those rows must leave the frontier, or
+            # the same denied batch would be re-selected forever
+            if fx.n_fetched == 0 and (
+                first is None or first.denied.limit(1).count() == 0
+            ):
+                return self._uncommitted(r, fx.n_errors)
+            dd = self._discover_dedup(scope, fx.content, robots_prev, first, r)
+            scope.mark("robots")
+            nf = self._next_frontier(frontier, fx, first, dd.fresh, new_state)
+            return self._commit(scope, r, frontier_rows, fx, first, dd, nf)
 
-        frontier = self._read("frontier", r)
-        host_state = self._read("host_state", r)
-
+    def _select(
+        self, scope: RoundScope, frontier: DataFrame, host_state: DataFrame
+    ) -> tuple[DataFrame, DataFrame, int, int | None]:
+        # returns the candidate batch, the refilled token balances,
+        # the frontier row count, and the fetch stage's partition
+        # count — None when the selection exchange already keyed the
+        # batch at it
         # 1. token-bucket refill for hosts with pending work; hosts not
         #    pending this round keep their balance untouched (matches
         #    the reference policy in plans/simulator.py)
@@ -820,7 +916,7 @@ class CrawlEngine:
         # r6 profile showed the host_state commit alone re-running it
         # for 4s a round at a 700k-row frontier.  The cache is one row
         # per pending/known host, materialized by the first job.
-        new_state = refreshed.unionByName(idle).persist()
+        new_state = scope.persist(refreshed.unionByName(idle))
 
         # 2. politeness-budgeted selection: salted top-k per host by
         #    (priority, seq) with k = the host's token balance.
@@ -839,9 +935,10 @@ class CrawlEngine:
         # the frontier row count is tracked arithmetically
         # (rows' = rows - fetched + new); the first round after
         # init/resume pays one parquet-metadata count
-        if self._frontier_rows is None:
-            self._frontier_rows = frontier.count()
-        single_phase_sel = self._frontier_rows <= 2_000_000
+        frontier_rows = self._frontier_rows
+        if frontier_rows is None:
+            frontier_rows = frontier.count()
+        single_phase = frontier_rows <= 2_000_000
         # fetch-stage parallelism, derived from the round's expected
         # fetch volume (~2k rows/task), capped at ONE task per core:
         # each Python-stage task pays a measured ~140ms runner-init
@@ -851,9 +948,9 @@ class CrawlEngine:
         # latency variance raises this through defaultParallelism on
         # a bigger cluster.
         cores = self.spark.sparkContext.defaultParallelism
-        expected = min(self._frontier_rows, self.cap * self.n_hosts)
-        par = max(1, min(cores, -(-expected // 2048)))
-        if single_phase_sel and self.fetch_stage is None:
+        expected = min(frontier_rows, self.cap * self.n_hosts)
+        fetch_par = max(1, min(cores, -(-expected // 2048)))
+        if single_phase and self.fetch_stage is None:
             # pre-key the selection exchange at the fetch stage's own
             # partitioning: the single-phase window reuses it (same
             # host_id clustering), and the fused fetch UDF then runs
@@ -861,7 +958,8 @@ class CrawlEngine:
             # repartition, one exchange fewer per round.  Balance:
             # a host's selected rows are capped at `cap`, so host
             # keying bounds any task at cap x (hosts/par) rows.
-            budgeted = budgeted.repartition(par, "host_id")
+            budgeted = budgeted.repartition(fetch_par, "host_id")
+            fetch_par = None
         candidates = topk_per_group(
             budgeted,
             group_cols=["host_id"],
@@ -869,9 +967,13 @@ class CrawlEngine:
             k=F.col("tokens"),
             salt_buckets=self.salt_buckets,
             prune_k=self.cap,
-            single_phase=single_phase_sel,
+            single_phase=single_phase,
         ).drop("tokens")
+        return candidates, new_state, frontier_rows, fetch_par
 
+    def _vet_first_contact(
+        self, scope: RoundScope, candidates: DataFrame, robots_prev: DataFrame
+    ) -> _FirstContact:
         # 2b. robots-before-first-fetch (production path only; round-3
         #     ADVICE, medium): RFC 9309 requires consulting robots.txt
         #     BEFORE crawling, but rules are normally fetched at link-
@@ -884,58 +986,46 @@ class CrawlEngine:
         #     from the fetch AND removed from the frontier (they can
         #     never legally be fetched).  In steady state every host
         #     has a cached row, so this is an empty anti-join.
-        robots_prev = self._read("robots", r)
-        prefetch_rules = None
-        denied = None
-        round_caches: list = []
-        if self.robots_stage is not None:
-            # the candidate batch (bounded by the round budget) gets
-            # FOUR consumers in this path — miss-host detection, the
-            # vet split, the fetch stage, and the denied-keys anti-join
-            # in the frontier write — so one bounded persist stops the
-            # top-k selection from recomputing per consumer
-            candidates = candidates.persist()
-            round_caches.append(candidates)
-            miss_sites = (
-                candidates.groupBy("host_id")
-                .agg(F.min("url").alias("url"))
-                .join(robots_prev.select("host_id"), "host_id", "left_anti")
-                .persist()
+        # the candidate batch (bounded by the round budget) gets FOUR
+        # consumers in this path — miss-host detection, the vet split,
+        # the fetch stage, and the denied-keys anti-join in the
+        # frontier write — so one bounded persist stops the top-k
+        # selection from recomputing per consumer
+        candidates = scope.persist(candidates)
+        miss_sites = scope.persist(
+            candidates.groupBy("host_id")
+            .agg(F.min("url").alias("url"))
+            .join(robots_prev.select("host_id"), "host_id", "left_anti")
+        )
+        obs = Observation()
+        rules = scope.persist(
+            self._robots_fetch(miss_sites, robots_prev).observe(
+                obs, F.count(F.lit(1)).alias("n_prefetch")
             )
-            round_caches.append(miss_sites)
-            prefetch_obs = Observation()
-            prefetch_rules = (
-                self._robots_fetch(miss_sites, robots_prev)
-                .observe(
-                    prefetch_obs, F.count(F.lit(1)).alias("n_prefetch")
-                )
-                .persist()
-            )
-            round_caches.append(prefetch_rules)
-            miss_hosts = F.broadcast(miss_sites.select("host_id"))
-            unknown = candidates.join(miss_hosts, "host_id", "left_semi")
-            vetted = (
-                robots_filter_stage(
-                    self._with_path(unknown), prefetch_rules
-                )
-                .drop("path")
-                .persist()
-            )
-            round_caches.append(vetted)
-            candidates = candidates.join(
-                miss_hosts, "host_id", "left_anti"
-            ).unionByName(vetted)
-            denied = unknown.join(
-                vetted.select("url_hash"), "url_hash", "left_anti"
-            ).select("url_hash")
+        )
+        miss_hosts = F.broadcast(miss_sites.select("host_id"))
+        unknown = candidates.join(miss_hosts, "host_id", "left_semi")
+        vetted = scope.persist(
+            robots_filter_stage(self._with_path(unknown), rules).drop("path")
+        )
+        kept = candidates.join(miss_hosts, "host_id", "left_anti")
+        denied = unknown.join(vetted.select("url_hash"), "url_hash", "left_anti")
+        return _FirstContact(
+            kept.unionByName(vetted), denied.select("url_hash"), rules,
+            miss_sites, obs,
+        )
 
+    def _fetch_extract(
+        self, scope: RoundScope, candidates: DataFrame, fetch_par: int | None,
+        r: int,
+    ) -> _Fetched:
         # 3. fetch + single-parse extraction (spans, links, title).
         # The Python stage needs explicit ROW-based partitioning (AQE
         # sizes by bytes; fetch/parse cost is per row and the UDF's
-        # output is ~10x its input).  `par` was derived before the
-        # selection; on the single-phase path the selection exchange
-        # already established it, so the fused UDF rides the window's
-        # stage with no further repartition.
+        # output is ~10x its input).  `fetch_par` was derived by the
+        # selection; None means the selection exchange already
+        # established it, so the fused UDF rides the window's stage
+        # with no further repartition.
         has_err = False
         if self.fetch_stage is not None:
             # no pre-repartition: a grouped fetch stage (http_fetch_
@@ -943,20 +1033,18 @@ class CrawlEngine:
             # (host, url) exchange would just be shuffled again
             with_html = self.fetch_stage(candidates)
             has_err = "fetch_error" in with_html.columns
-        else:
-            with_html = None
-        # failed fetches are NOT fetched: excluded from docs/fetch_log/
-        # seen and host tokens unspent — but their url_hashes are kept
-        # as DATA (not just a count) so the frontier update below can
-        # bump each row's retry counter and drop rows past
-        # max_fetch_retries instead of re-selecting a permanently
-        # failing URL every round (round-2 ADVICE, high).  The HTTP
-        # status rides along when the fetch stage provides one: 4xx
-        # rows ARE fetched (leave the frontier, spend a token, logged
-        # with their status) but their bodies are CONTENT-FILTERED out
-        # of the docs corpus and link discovery — a custom 404 page is
-        # neither training data nor a link source
-        if with_html is not None:
+            # failed fetches are NOT fetched: excluded from docs/
+            # fetch_log/seen and host tokens unspent — but their
+            # url_hashes are kept as DATA (not just a count) so the
+            # frontier update can bump each row's retry counter and
+            # drop rows past max_fetch_retries instead of re-selecting
+            # a permanently failing URL every round (round-2 ADVICE,
+            # high).  The HTTP status rides along when the fetch stage
+            # provides one: 4xx rows ARE fetched (leave the frontier,
+            # spend a token, logged with their status) but their bodies
+            # are CONTENT-FILTERED out of the docs corpus and link
+            # discovery — a custom 404 page is neither training data
+            # nor a link source
             has_status = "status" in with_html.columns
             keep_cols = list(candidates.columns) + (
                 ["status"] if has_status else []
@@ -974,22 +1062,17 @@ class CrawlEngine:
             has_status = False
             keep_cols = list(candidates.columns)
             n_hosts = self.n_hosts
-            if single_phase_sel:
-                # the selection exchange was pre-keyed at (par,
-                # host_id) and the single-phase window reused it, so
-                # the candidate batch is already row-balanced on `par`
-                # partitions — the fused UDF runs in the window's
-                # stage, no second exchange
-                spread = candidates
-            else:
-                spread = candidates.repartition(par, "host_id", "url_hash")
+            spread = (
+                candidates if fetch_par is None
+                else candidates.repartition(fetch_par, "host_id", "url_hash")
+            )
             extracted = spread.withColumn(
                 "ex",
                 fused_fetch_extract_udf(
                     lambda u: html_for_url(u, n_hosts)
                 )(F.col("url")),
             )
-        fetched_all = extracted.select(*keep_cols, "ex").persist()
+        fetched_all = scope.persist(extracted.select(*keep_cols, "ex"))
         err = (
             F.col("fetch_error").isNotNull() if has_err else F.lit(False)
         )
@@ -1019,48 +1102,47 @@ class CrawlEngine:
         )
         # 2xx (or statusless synthetic) rows are corpus+discovery
         # content; non-2xx rows stay in fetched (seen/log/tokens) only
+        content = fetched
         if has_status:
             content = fetched.filter(
                 F.col("status").isNull()
                 | ((F.col("status") >= 200) & (F.col("status") < 300))
             )
-        else:
-            content = fetched
-        _mark("fetch_extract")
-        # a zero-fetch round still COMMITS when the robots pre-vet
-        # denied candidates: those rows must leave the frontier, or the
-        # same denied batch would be re-selected forever
-        if n_fetched == 0 and (
-            denied is None or denied.limit(1).count() == 0
-        ):
-            new_state.unpersist()
-            fetched_all.unpersist()
-            for cached in round_caches:
-                cached.unpersist()
-            # 'frontier exhausted' and 'every fetch failed this round'
-            # are different conditions (round-2 ADVICE, medium): a
-            # clean empty round ends the crawl; an all-error round is
-            # retried (tokens refill, rows kept) up to
-            # max_fetch_retries consecutive times, then the crawl
-            # stops rather than spinning on a dead network
-            if n_errors > 0:
-                self._consec_all_error_rounds += 1
-            stopped = (
-                n_errors == 0
-                or self._consec_all_error_rounds >= self.max_fetch_retries
-            )
-            return {
-                "round": r + 1,
-                "fetched": 0,
-                "stopped": stopped,
-                "fetch_errors": n_errors,
-                # nothing was written and self.round did not advance: a
-                # retried outage round must not collide with the later
-                # committed round of the same number in metrics streams
-                "committed": False,
-            }
-        self._consec_all_error_rounds = 0
+        errored = fetched_all.filter(err) if n_errors > 0 else None
+        return _Fetched(
+            fetched, content, errored, has_status, lineage, n_fetched,
+            n_errors,
+        )
 
+    def _uncommitted(self, r: int, n_errors: int) -> dict:
+        # a round that fetched nothing commits nothing.  'frontier
+        # exhausted' and 'every fetch failed this round' are different
+        # conditions (round-2 ADVICE, medium): a clean empty round ends
+        # the crawl; an all-error round is retried (tokens refill, rows
+        # kept) up to max_fetch_retries consecutive times, then the
+        # crawl stops rather than spinning on a dead network
+        if n_errors > 0:
+            self._consec_all_error_rounds += 1
+        stopped = (
+            n_errors == 0
+            or self._consec_all_error_rounds >= self.max_fetch_retries
+        )
+        return {
+            "round": r + 1,
+            "fetched": 0,
+            "stopped": stopped,
+            "fetch_errors": n_errors,
+            # nothing was written and self.round did not advance: a
+            # retried outage round must not collide with the later
+            # committed round of the same number in metrics streams
+            "committed": False,
+        }
+
+    def _discover_dedup(
+        self, scope: RoundScope, content: DataFrame, robots_prev: DataFrame,
+        first: _FirstContact | None, r: int,
+    ) -> _Discovered:
+        # all lazy: the seen write pulls the whole pipeline
         # 4. link discovery -> canonical candidate URLs.  Robots rules
         #    come from the per-host cache table: rules are fetched only
         #    for hosts seen for the first time (cache misses are a
@@ -1074,20 +1156,13 @@ class CrawlEngine:
         # materializing a cache of every link string (profiled: persist
         # 2.1s vs recompute 1.2s per macro-round), and skipping the
         # cache keeps memory high-water independent of discovery
-        # volume — the scale-safe choice.  Under the narrow probe this
-        # frame has two consumers (hash keys into the bucket cogroup;
-        # the string re-attach) — both recompute from cached content.
+        # volume — the scale-safe choice.
         candidates_raw = (
             content.select(F.explode("ex.links").alias("raw_url"))
             .select(canonicalize_url(F.col("raw_url")).alias("url"))
             .withColumn("host_id", host_id_col(F.col("url")))
             .filter(F.col("host_id").isNotNull())
         )
-        if prefetch_rules is not None:
-            # rules fetched by the pre-vet join the cache view for the
-            # rest of the round (and its write) — never re-fetched at
-            # discovery time
-            robots_prev = robots_prev.unionByName(prefetch_rules)
 
         # 5. seen-set dedup FIRST.  While the seen set is within the
         #    broadcast bound (no committed bloom), a hash-keyed
@@ -1112,52 +1187,49 @@ class CrawlEngine:
             seen_keys = F.broadcast(seen.select("url_hash"))
         else:
             seen_probe = "shuffle"
-        bloom_caches: list = []
         discovered = candidates_raw.select(
             "url", "host_id", url_hash(F.col("url")).alias("url_hash")
         )
         # persisted: the genuinely-new set (post-dedup, post-anti-join
         # — orders of magnitude smaller than raw discovery) feeds both
         # the new-host robots lookup and the robots vet below
-        new_keys = new_urls(
-            discovered,
-            seen_keys,
-            blooms,
-            n_buckets=self.bloom_buckets,
-            persisted_out=bloom_caches,
-            dedup=True,
-            # hash-only Arrow exchange; strings re-attached against the
-            # post-anti-join new set (bounded per round by the
-            # discovery volume, whose hash set broadcasts at 8 B/row)
-            narrow=self.narrow_probe,
-            broadcast_new=8 * self.cap * self.n_hosts <= 4_000_000,
-            max_rows_per_bucket=4 * self.bloom_target_rows_per_bucket,
-        ).persist()
-        bloom_caches.append(new_keys)
+        new_keys = scope.persist(
+            new_urls(
+                discovered,
+                seen_keys,
+                blooms,
+                n_buckets=self.bloom_buckets,
+                persisted_out=scope.cached,
+                dedup=True,
+                max_rows_per_bucket=4 * self.bloom_target_rows_per_bucket,
+            )
+        )
         # robots rules: fetched once per host with a genuinely-new URL
         # this round (cache misses ride the robots write as an
         # Observation), plus — production path — bounded re-fetches of
         # unreachable hosts.  Hosts whose every discovered link is
         # already seen need no rules: nothing of theirs can enter the
         # frontier this round, and the pre-vet covers first contact.
-        if self.robots_stage is not None:
+        if first is not None:
+            # rules fetched by the pre-vet join the cache view for the
+            # rest of the round (and its write) — never re-fetched at
+            # discovery time
+            robots_prev = robots_prev.unionByName(first.rules)
             new_sites = (
                 new_keys.groupBy("host_id")
                 .agg(F.min("url").alias("url"))
                 .join(robots_prev.select("host_id"), "host_id", "left_anti")
             )
+            # a host the pre-vet just fetched is not retried again
+            # within the same round
             retry_sites = robots_prev.filter(
                 (F.col("fetch_fails") > 0)
                 & (F.col("fetch_fails") <= F.lit(self.max_fetch_retries))
-            ).select("host_id", "url")
-            if prefetch_rules is not None:
-                # a host the pre-vet just fetched is not retried again
-                # within the same round
-                retry_sites = retry_sites.join(
-                    miss_sites.select("host_id"), "host_id", "left_anti"
-                )
+            ).select("host_id", "url").join(
+                first.sites.select("host_id"), "host_id", "left_anti"
+            )
             sites = new_sites.unionByName(retry_sites)
-            new_rules = self._robots_fetch(sites, robots_prev).persist()
+            new_rules = scope.persist(self._robots_fetch(sites, robots_prev))
             robots_kept = robots_prev.join(
                 retry_sites.select("host_id"), "host_id", "left_anti"
             )
@@ -1167,7 +1239,7 @@ class CrawlEngine:
                 .distinct()
                 .join(robots_prev.select("host_id"), "host_id", "left_anti")
             )
-            new_rules = fetch_robots_rules(new_hosts).persist()
+            new_rules = scope.persist(fetch_robots_rules(new_hosts))
             robots_kept = robots_prev
         robots_obs = Observation()
         robots = robots_kept.unionByName(
@@ -1175,7 +1247,6 @@ class CrawlEngine:
                 robots_obs, F.count(F.lit(1)).alias("n_new_rules")
             )
         )
-        _mark("robots")
         # robots vetting AFTER the set-difference: per-URL allow/deny
         # commutes with dedup and anti-join, so it vets the (much
         # smaller) genuinely-new set instead of the full discovery
@@ -1195,34 +1266,35 @@ class CrawlEngine:
                 )
                 .drop("disallow_mod", "disallow_rem")
             )
-        fresh = allowed.select(
-            "url",
-            "host_id",
-            F.lit(r + 1).alias("priority"),
-            seq_col(F.col("url")).alias("seq"),
-            "url_hash",
-            F.lit(0).alias("fails"),
-        ).persist()
-        # the new-URL count rides the seen write as an Observation
-        # instead of paying a separate count job; fresh stays persisted
-        # because three sinks consume it (seen, frontier, bloom)
-        n_new_obs = Observation()
-        seen_delta = fresh.observe(
-            n_new_obs, F.count(F.lit(1)).alias("n_new")
-        ).select("url", "url_hash")
+        # persisted: three sinks consume it (seen, frontier, bloom)
+        fresh = scope.persist(
+            allowed.select(
+                "url",
+                "host_id",
+                F.lit(r + 1).alias("priority"),
+                seq_col(F.col("url")).alias("seq"),
+                "url_hash",
+                F.lit(0).alias("fails"),
+            )
+        )
+        return _Discovered(fresh, robots, robots_obs, seen, blooms, seen_probe)
 
+    def _next_frontier(
+        self, frontier: DataFrame, fx: _Fetched, first: _FirstContact | None,
+        fresh: DataFrame, new_state: DataFrame,
+    ) -> _NextFrontier:
         # 6. next frontier = pending - fetched - robots-denied + fresh.
         #    The removal set is bounded by the round budget (cap x
         #    n_hosts, known a priori — fetched and denied are disjoint
         #    subsets of the candidate batch): broadcast only while that
         #    bound is small, else a plain anti-join (frontier_anti_join)
         round_budget = self.cap * self.n_hosts
-        removal_keys = fetched.select("url_hash")
+        removal_keys = fx.fetched.select("url_hash")
         denied_obs = None
-        if denied is not None:
+        if first is not None:
             denied_obs = Observation()
             removal_keys = removal_keys.unionByName(
-                denied.observe(
+                first.denied.observe(
                     denied_obs, F.count(F.lit(1)).alias("n_denied")
                 )
             )
@@ -1232,15 +1304,20 @@ class CrawlEngine:
             round_budget,
             self.broadcast_fetched_max,
         )
-        if has_err and n_errors > 0:
+        kept_obs = None
+        if fx.errored is not None:
             # errored rows stay, with a bumped retry counter; rows past
             # the retry budget are dropped so a permanently failing URL
             # cannot occupy its host's top-k selection forever
-            err_keys = fetched_all.filter(err).select(
+            err_keys = fx.errored.select(
                 "url_hash", F.lit(1).alias("_errored")
             )
             if round_budget <= self.broadcast_fetched_max:
                 err_keys = F.broadcast(err_keys)
+            # retry-capped drops make the arithmetic row tracker drift;
+            # an Observation on the kept branch rides the frontier write
+            # and restores the exact count
+            kept_obs = Observation()
             kept = (
                 kept.join(err_keys, "url_hash", "left")
                 .withColumn(
@@ -1251,18 +1328,24 @@ class CrawlEngine:
                 )
                 .drop("_errored")
                 .filter(F.col("fails") <= F.lit(self.max_fetch_retries))
+                .observe(kept_obs, F.count(F.lit(1)).alias("n_kept"))
             )
-        next_frontier = kept.unionByName(fresh)
-
         # 7. spend tokens
-        spent = fetched.groupBy("host_id").agg(F.count("*").alias("used"))
-        host_state_next = new_state.join(spent, "host_id", "left").select(
+        spent = fx.fetched.groupBy("host_id").agg(F.count("*").alias("used"))
+        host_state = new_state.join(spent, "host_id", "left").select(
             "host_id",
             (F.col("tokens") - F.coalesce(F.col("used"), F.lit(0)))
             .cast("int")
             .alias("tokens"),
         )
+        return _NextFrontier(
+            kept.unionByName(fresh), host_state, kept_obs, denied_obs
+        )
 
+    def _commit(
+        self, scope: RoundScope, r: int, frontier_rows: int, fx: _Fetched,
+        first: _FirstContact | None, dd: _Discovered, nf: _NextFrontier,
+    ) -> dict:
         # 8. commit the round's snapshots.  The seven tables are
         #    independent and their expensive inputs (fetched, fresh,
         #    new_rules) are persisted+materialized before their
@@ -1272,7 +1355,7 @@ class CrawlEngine:
         #    jobs to roughly the slowest one.  (On a cluster this is
         #    the standard multi-sink pattern; atomicity stays at round
         #    granularity because the manifest is written only after
-        #    every future completes.)  Tables whose inputs were ALL
+        #    every write landed.)  Tables whose inputs were ALL
         #    materialized by the stats job (docs, fetch_log,
         #    host_state read only fetched_all/new_state cache) start
         #    EARLY, overlapping the seen write's discovery pipeline;
@@ -1281,25 +1364,22 @@ class CrawlEngine:
         #    — racing them cold would recompute the dedup plan per
         #    consumer (caches are per-executor on a real cluster).
         nxt = r + 1
-        early_writes = []
+        n_fetched = fx.n_fetched
         if self.write_docs:
-            early_writes.append(
-                (
-                    _coalesce_for_write(
-                        content.select(
-                            "url",
-                            F.lit(nxt).alias("round"),
-                            F.col("ex.title").alias("title"),
-                            F.col("ex.spans").alias("spans"),
-                        ),
-                        n_fetched,
-                        # docs rows are wide (span arrays): smaller
-                        # files keep the parquet ENCODE parallel — at
-                        # bench scale ~8 writer tasks, not 1-2
-                        rows_per_file=8_192,
-                    ),
-                    "docs",
-                )
+            docs = fx.content.select(
+                "url",
+                F.lit(nxt).alias("round"),
+                F.col("ex.title").alias("title"),
+                F.col("ex.spans").alias("spans"),
+            )
+            # docs rows are wide (span arrays): smaller files keep the
+            # parquet ENCODE parallel — at bench scale ~8 writer tasks,
+            # not 1-2
+            scope.submit(
+                self._write,
+                _coalesce_for_write(docs, n_fetched, rows_per_file=8_192),
+                "docs",
+                nxt,
             )
         log_cols = [
             F.lit(r).alias("round"),
@@ -1309,152 +1389,106 @@ class CrawlEngine:
             F.col("host_id"),
             F.size("ex.links").alias("n_links"),
         ]
-        if has_status:  # 4xx/5xx visibility in the log (ADVICE r2)
+        if fx.has_status:  # 4xx/5xx visibility in the log (ADVICE r2)
             log_cols.append(F.col("status"))
-        early_writes.append(
-            (
-                _coalesce_for_write(fetched.select(*log_cols), n_fetched),
-                "fetch_log",
-            )
+        scope.submit(
+            self._write,
+            _coalesce_for_write(fx.fetched.select(*log_cols), n_fetched),
+            "fetch_log",
+            nxt,
         )
-        last_full = max(self._seen_full_rounds())
-        compacted = nxt - last_full >= self.compact_every
+        scope.submit(self._write_per_host, nf.host_state, "host_state", nxt)
+        # the new-URL count rides the seen write as an Observation
+        # instead of paying a separate count job
+        n_new_obs = Observation()
+        seen_delta = dd.fresh.observe(
+            n_new_obs, F.count(F.lit(1)).alias("n_new")
+        ).select("url", "url_hash")
+        compacted = nxt - max(self._seen_full_rounds()) >= self.compact_every
         if compacted:
             # compaction: every compact_every rounds, rewrite the FULL
             # seen set as ONE snapshot (hash-partitioned) so the delta
             # chain — file count and scan cost per round — is bounded
             # for arbitrarily long crawls
             wpar = self.spark.sparkContext.defaultParallelism
-            full = seen.select("url", "url_hash").unionByName(seen_delta)
-            seen_write = (full.repartition(wpar, "url_hash"), "seen")
+            full = dd.seen.select("url", "url_hash").unionByName(seen_delta)
+            seen_df = full.repartition(wpar, "url_hash")
         else:
             # delta volume is bounded by the round's discovery
             # amplification (~8 links/page)
-            seen_write = (
-                _coalesce_for_write(seen_delta, n_fetched * 8), "seen"
-            )
+            seen_df = _coalesce_for_write(seen_delta, n_fetched * 8)
         # the seen write pulls `fresh` through its persist (and fires
         # the n_new observation) on the MAIN thread while the early
-        # cache-only writes run beside it; frontier/bloom/robots are
-        # submitted only after it returns (see the step-8 note above).
-        # One pool spans the whole commit: every exit path — a raising
-        # seen write included — joins the early writes and surfaces
-        # their errors before the round fails (no leaked threads, no
-        # unobserved failures).
-        with ThreadPoolExecutor(
-            max_workers=8, thread_name_prefix="crawl-commit"
-        ) as pool:
-            futures = [
-                pool.submit(self._write, df, table, nxt)
-                for df, table in early_writes
-            ]
-            futures.append(
-                pool.submit(
-                    self._write_per_host, host_state_next, "host_state", nxt
-                )
-            )
-            try:
-                self._write(*seen_write, nxt)
-                # the seen write carries the whole discovery+dedup
-                # pipeline (explode -> canonicalize -> robots filter ->
-                # anti-join), so it gets its own section: 'commit'
-                # below is pure snapshot-write cost, comparable
-                # round-to-round
-                _mark("seen_dedup")
-                # the n_new observation fired with the seen write
-                # above; the tracked seen count decides and sizes the
-                # bloom build below
-                n_new = _obs_count(n_new_obs, "n_new")
-                self._seen_rows += n_new
-                kept_obs = None
-                frontier_df = next_frontier
-                if has_err and n_errors > 0:
-                    # retry-capped drops make the arithmetic row
-                    # tracker drift; an Observation on the kept branch
-                    # rides the frontier write and restores the exact
-                    # count
-                    kept_obs = Observation()
-                    frontier_df = kept.observe(
-                        kept_obs, F.count(F.lit(1)).alias("n_kept")
-                    ).unionByName(fresh)
-                late_writes = [
-                    (
-                        _coalesce_for_write(
-                            frontier_df, self._frontier_rows + 8 * n_fetched
-                        ),
-                        "frontier",
-                    )
-                ]
-                bloom_next = self._next_bloom(blooms, fresh, compacted, nxt)
-                if bloom_next is not None:
-                    late_writes.append((bloom_next[0], "bloom"))
-                # robots is per-host (write_small fast path) but
-                # consumes new_rules -> new_keys, so it belongs to the
-                # late batch
-                futures += [
-                    pool.submit(self._write, df, table, nxt)
-                    for df, table in late_writes
-                ]
-                futures.append(
-                    pool.submit(self._write_per_host, robots, "robots", nxt)
-                )
-            finally:
-                _join_all(futures)
+        # cache-only writes run beside it.  It carries the whole
+        # discovery+dedup pipeline (explode -> canonicalize -> robots
+        # filter -> anti-join), so it gets its own section: 'commit'
+        # is pure snapshot-write cost, comparable round-to-round
+        self._write(seen_df, "seen", nxt)
+        scope.mark("seen_dedup")
+        n_new = _obs_count(n_new_obs, "n_new")
+        seen_rows = self._seen_rows + n_new
+        scope.submit(
+            self._write,
+            _coalesce_for_write(nf.frontier, frontier_rows + 8 * n_fetched),
+            "frontier",
+            nxt,
+        )
+        bloom_next = self._next_bloom(
+            dd.blooms, dd.fresh, compacted, nxt, seen_rows
+        )
+        if bloom_next is not None:
+            scope.submit(self._write, bloom_next[0], "bloom", nxt)
+        # robots is per-host (write_small fast path) but consumes
+        # new_rules -> new_keys, so it belongs to the late batch
+        scope.submit(self._write_per_host, dd.robots, "robots", nxt)
+        scope.join()
+
+        # every write of the round landed: only now do the trackers
+        # and the manifest move, so a failed write leaves both at the
+        # last committed round, in-process or via resume
         if compacted:
             # record the full snapshot only AFTER its write succeeded —
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
         if bloom_next is not None:
-            _, want_buckets, built = bloom_next
-            # switch the engine to a grown bucket count, and to probing
-            # a newly built bloom, only AFTER the bitmaps landed: the
-            # probe must always match the latest COMMITTED build (a
-            # failed write must leave the next probe on the old
-            # geometry or the broadcast path, in-process or via resume
-            # — the manifest below commits them together)
-            self.bloom_buckets = want_buckets
-            self.manifest["config"]["bloom_buckets"] = want_buckets
+            # a grown bucket count and a newly built bloom are probed
+            # only once their bitmaps landed: the probe must always
+            # match the latest COMMITTED build
+            _, self.bloom_buckets, self._bloom_bits, built = bloom_next
+            self.manifest["config"]["bloom_buckets"] = self.bloom_buckets
             if built:
                 self._bloom_built_round = nxt
+        self._seen_rows = seen_rows
         n_denied = (
-            _obs_count(denied_obs, "n_denied") if denied_obs is not None else 0
+            _obs_count(nf.denied_obs, "n_denied")
+            if nf.denied_obs is not None else 0
         )
-        if kept_obs is not None:
-            self._frontier_rows = _obs_count(kept_obs, "n_kept") + n_new
+        if nf.kept_obs is not None:
+            self._frontier_rows = _obs_count(nf.kept_obs, "n_kept") + n_new
         else:
-            self._frontier_rows = (
-                self._frontier_rows - n_fetched - n_denied + n_new
-            )
-        for cached in bloom_caches:
-            cached.unpersist()
-        for cached in round_caches:
-            cached.unpersist()
-        new_rules.unpersist()
-        new_state.unpersist()
-        fetched_all.unpersist()
-        fresh.unpersist()
-        _mark("commit")
-
-        cache_misses = _obs_count(robots_obs, "n_new_rules")
-        if prefetch_rules is not None:
-            cache_misses += _obs_count(prefetch_obs, "n_prefetch")
+            self._frontier_rows = frontier_rows - n_fetched - n_denied + n_new
+        cache_misses = _obs_count(dd.robots_obs, "n_new_rules")
+        if first is not None:
+            cache_misses += _obs_count(first.obs, "n_prefetch")
         self._host_rows += cache_misses
+        self._consec_all_error_rounds = 0
+        scope.mark("commit")
         metrics = {
             "round": nxt,
             "fetched": n_fetched,
             "discovered_new": n_new,
-            "fetch_errors": n_errors,
+            "fetch_errors": fx.n_errors,
             "robots_cache_misses": cache_misses,
             # how this round deduped against seen: "broadcast" (one
             # broadcast anti-join), "bloom" (bloom probe + suspect
             # anti-join) or "shuffle" (use_bloom=False past the bound)
-            "seen_probe": seen_probe,
-            "wall_sec": round(time.time() - t0, 3),
-            "sections": sections,
-            "lineage": lineage,
+            "seen_probe": dd.seen_probe,
+            "wall_sec": round(time.time() - scope.started, 3),
+            "sections": scope.sections,
+            "lineage": fx.lineage,
         }
-        if denied_obs is not None:
+        if nf.denied_obs is not None:
             metrics["robots_denied"] = n_denied
         self.manifest["rounds"].append(metrics)
         self.manifest["seen_rows"] = self._seen_rows

@@ -8,10 +8,15 @@
    anti-join is the authority).
 """
 
+import json
+import os
+import threading
+
 import pytest
 
 from scalpel_ts_spark.plans.frontier import CrawlEngine
 from scalpel_ts_spark.plans.simulator import simulate_crawl
+from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
 from scalpel_ts_spark.sources.synthetic import make_url
 
 SEEDS = [make_url(1, 0), make_url(2, 5), make_url(7, 11)]
@@ -58,6 +63,14 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
+    # a manifest written while the retired narrow_probe knob existed
+    # carries it in its config; resume must still accept it
+    mpath = os.path.join(wd, "manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["config"]["narrow_probe"] = False
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
     # simulate a crash: reopen from the manifest and continue
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 2
@@ -89,59 +102,6 @@ def test_bloom_prefilter_is_transparent(spark, tmp_path_factory):
         assert {m["seen_probe"] for m in metrics} == {want}
         assert _engine_log(eng) == _sim_log(sim)
         assert {r.url for r in eng.seen().collect()} == sim.seen
-
-
-def test_narrow_probe_matches_simulator(spark, tmp_path_factory, sim_state):
-    # wide is the engine default (measured faster on this box — see
-    # frontier.py narrow_probe rationale); the narrow shape is the
-    # network-shuffle deploy knob and must stay equal to the
-    # executable spec too
-    wd = str(tmp_path_factory.mktemp("crawl_narrow"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        narrow_probe=True, write_docs=False,
-        broadcast_fetched_max=0,  # the narrow shape is a bloom probe
-    )
-    eng.init(SEEDS)
-    eng.run(ROUNDS)
-    assert _engine_log(eng) == _sim_log(sim_state)
-    assert {r.url for r in eng.seen().collect()} == sim_state.seen
-
-
-def test_probe_variants_match_wide(spark):
-    # hash-only cogroup + string re-attach (both re-attach paths) and
-    # JVM pre-aggregate dedup == the wide fused probe.
-    # Rows are a pure function of url_hash — the engine-wide premise
-    # (equal hash => identical row) the narrow dedup relies on.
-    import pyspark.sql.functions as F
-
-    from scalpel_ts_spark.operators.seen import build_bloom, new_urls
-
-    key = (F.col("id") % 900)  # duplicate hashes on purpose
-    cand = spark.range(0, 3000).select(
-        F.concat(F.lit("http://h"), (key % 7).cast("string"),
-                 F.lit(".test/p/"), key.cast("string")).alias("url"),
-        (key % 7).alias("host_id"),
-        key.alias("url_hash"),
-    )
-    seen = spark.range(0, 300).select(F.col("id").alias("url_hash"))
-    blooms = build_bloom(seen, n_buckets=8)
-    wide = new_urls(
-        cand, seen, blooms, n_buckets=8, dedup=True
-    ).collect()
-    expected = sorted((r.url, r.host_id, r.url_hash) for r in wide)
-    variants = [
-        {"narrow": True, "broadcast_new": True},
-        {"narrow": True, "broadcast_new": False},
-        {"preagg": True},
-    ]
-    for kw in variants:
-        got = new_urls(
-            cand, seen, blooms, n_buckets=8, dedup=True, **kw
-        ).collect()
-        assert sorted(
-            (r.url, r.host_id, r.url_hash) for r in got
-        ) == expected, kw
 
 
 def test_bloom_buckets_autoscale_with_budget(spark, tmp_path_factory):
@@ -848,22 +808,32 @@ def test_bloom_engages_past_broadcast_bound(spark, tmp_path_factory, sim_state):
     assert {r.url for r in eng3.seen().collect()} == sim_state.seen
 
 
-def test_failed_seen_write_joins_commit_pool(spark, tmp_path_factory, sim_state):
-    # a seen write that raises on the main thread must still join the
-    # concurrent early writes (no commit-pool thread left alive), leave
-    # the committed manifest untouched, and resume to the simulator
-    import threading
+class _WriteFailsOnce(ParquetSnapshotStorage):
+    """Raises on the first write of ``table`` at round 1."""
 
-    from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
+    def __init__(self, spark, workdir, table):
+        super().__init__(spark, workdir)
+        self.fail = (table, 1)
 
-    class SeenWriteFails(ParquetSnapshotStorage):
-        def write(self, df, table, rnd):
-            if (table, rnd) == ("seen", 1):
-                raise OSError("injected seen write failure")
-            super().write(df, table, rnd)
+    def write(self, df, table, rnd):
+        if (table, rnd) == self.fail:
+            self.fail = None
+            raise OSError(f"injected {table} write failure")
+        super().write(df, table, rnd)
 
-    wd = str(tmp_path_factory.mktemp("crawl_seenfail"))
-    storage = SeenWriteFails(spark, wd)
+
+# one table from each commit batch: fetch_log is an early pool write,
+# seen runs on the main thread, frontier is a late pool write
+@pytest.mark.parametrize("table", ["fetch_log", "seen", "frontier"])
+def test_failed_seen_write_joins_commit_pool(
+    spark, tmp_path_factory, sim_state, table
+):
+    # a raising write must join every concurrent write (no commit-pool
+    # thread left alive), release every frame the round persisted,
+    # leave the committed manifest untouched, and resume to the
+    # simulator
+    wd = str(tmp_path_factory.mktemp(f"crawl_{table}_fail"))
+    storage = _WriteFailsOnce(spark, wd, table)
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
         storage=storage,
@@ -871,16 +841,38 @@ def test_failed_seen_write_joins_commit_pool(spark, tmp_path_factory, sim_state)
     eng.init(SEEDS)
     before = storage.load_manifest()
     threads_before = set(threading.enumerate())
-    with pytest.raises(OSError, match="injected seen write failure"):
+    spark.catalog.clearCache()
+    with pytest.raises(OSError, match=f"injected {table} write failure"):
         eng.run_round()
     leaked = [
         t for t in threading.enumerate()
         if t not in threads_before and t.is_alive()
     ]
     assert not leaked
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert storage.load_manifest() == before
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 0
     eng2.run(ROUNDS)
     assert _engine_log(eng2) == _sim_log(sim_state)
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
+
+
+def test_failed_late_write_retries_in_process(spark, tmp_path_factory, sim_state):
+    # the seen write landed before the frontier write raised; the
+    # tracked seen count must not move until the round commits, or the
+    # in-process retry counts the round's new URLs twice (it drives the
+    # bloom gate and the bloom sizing)
+    wd = str(tmp_path_factory.mktemp("crawl_frontier_retry"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        storage=_WriteFailsOnce(spark, wd, "frontier"),
+    )
+    eng.init(SEEDS)
+    with pytest.raises(OSError, match="injected frontier write failure"):
+        eng.run_round()
+    eng.run_round()
+    assert eng.manifest["seen_rows"] == eng.seen().count()
+    eng.run(ROUNDS - 1)
+    assert _engine_log(eng) == _sim_log(sim_state)
+    assert {r.url for r in eng.seen().collect()} == sim_state.seen

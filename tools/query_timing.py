@@ -7,8 +7,7 @@ r3 with zero code change — round-3 verdict item 7 asked which it
 was).  This tool answers that: each named query runs ``reps`` times
 interleaved round-robin (q1,q2,...,q1,q2,... so no query owns a
 quiet or noisy stretch of the host), after one untimed warm-up rep
-apiece, and the per-query MEDIAN is reported — the same discipline
-tools/ab_bench.py uses for variant A/Bs.
+apiece, and the per-query MEDIAN is reported.
 
 Usage: python tools/query_timing.py [sf_dir] [reps] [query ...]
        (default: sf0.1, 5 reps, url_canonicalize)
